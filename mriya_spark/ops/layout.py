@@ -96,6 +96,11 @@ _EST_UNRELIABLE_NODES = (
 )
 
 
+#: Catalyst's sizeInBytes for a leaf without statistics (an RDD, a
+#: Python DataSource): ``spark.sql.defaultSizeInBytes``, Long.MaxValue
+_NO_SIZE_ESTIMATE = 2**63 - 1
+
+
 def resolve_auto_salt_chars(df: DataFrame, num_shards: int) -> int:
     """Pick ``salt_chars`` for ``shard_shuffle`` from the input's
     Catalyst row estimate (r19 verdict item 6: a 100 TB export must
@@ -108,7 +113,10 @@ def resolve_auto_salt_chars(df: DataFrame, num_shards: int) -> int:
     ``_EST_UNRELIABLE_NODES`` in the optimized plan returns 0 — the
     estimate there is off by ORDERS of magnitude (measured above), and
     a false-positive salt would cost two extra exchanges on every
-    gate-scale write. Overestimates on trusted shapes only engage the
+    gate-scale write. A leaf without statistics reports sizeInBytes
+    == Long.MaxValue, which a projection above it scales down but
+    never into a real estimate; any such leaf also returns 0.
+    Overestimates on trusted shapes only engage the
     salt early: positions are bit-identical either way
     (`test_salted_shard_shuffle_equals_windowed`), so the failure mode
     is plan shape, never results. Returns the smallest ``k`` with
@@ -118,6 +126,12 @@ def resolve_auto_salt_chars(df: DataFrame, num_shards: int) -> int:
         plan = df._jdf.queryExecution().optimizedPlan()
         tree = plan.toString()
         if any(n in tree for n in _EST_UNRELIABLE_NODES):
+            return 0
+        leaves = plan.collectLeaves()
+        if any(
+            int(str(leaves.apply(i).stats().sizeInBytes())) >= _NO_SIZE_ESTIMATE
+            for i in range(leaves.size())
+        ):
             return 0
         stats = plan.stats()
         rc = stats.rowCount()

@@ -306,13 +306,18 @@ def write_training_shards(
     (measured 1.7e6x on the pack capstone, r20) and a false-positive
     salt costs two exchanges per write; such callers size explicitly.
     Positions are bit-identical either way (property-tested), so the
-    knob only ever changes plan shape, never the export."""
+    knob only ever changes plan shape, never the export. Anything but
+    ``"auto"`` or an int in 0..8 raises ``ValueError``."""
     import json
 
     from mriya_spark.ops.layout import resolve_auto_salt_chars, shard_shuffle
 
     if salt_chars == "auto":
         salt_chars = resolve_auto_salt_chars(df, num_shards)
+    elif type(salt_chars) is not int or not 0 <= salt_chars <= 8:
+        raise ValueError(
+            f"salt_chars must be 'auto' or an int in 0..8; got {salt_chars!r}"
+        )
     sharded = shard_shuffle(
         df, key_col=key_col, num_shards=num_shards, seed=seed, epoch=epoch,
         salt_chars=salt_chars,

@@ -60,40 +60,71 @@ from mriya_spark.cachedir import cache_dir as _cache_dir
 _STAGE_ROOT = _cache_dir("stream_v2")
 
 
-def _ckpt_dir(tag: str) -> str:
-    """Fresh throwaway checkpoint location for the module's BOUNDED
-    stream drivers (r20, guide §1.2: per-micro-batch offset-log and
-    state-store commits fsync the checkpoint — measured ~35% of a
-    bounded drain's wall on this host's disk). Every driver here
-    already deletes its checkpoint after the drain (``shutil.rmtree``
-    at each call site), i.e. crash-durability across runs was NEVER
-    provided by these bounded replays — so the commit fsyncs buy
-    nothing and the checkpoint can live on tmpfs when one exists.
-    ``tempfile.mkdtemp`` gives a fresh 0700 directory, which keeps the
-    r5 pre-planting posture (no predictable shared path; Spark then
-    initializes the checkpoint inside a dir only we can write).
-    Unbounded production streams pass their own durable checkpoint
-    locations and never go through these drivers."""
-    import tempfile
-    import time as _time
+_SHM = "/dev/shm"
 
-    if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-        # sweep crash-orphaned checkpoints (normal exits rmtree their
-        # own): age-gated like the stream_v2 sweep, best-effort
-        cutoff = _time.time() - 3600
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, owned by another user
+        return True
+    return True
+
+
+def _sweep_shm_ckpts(max_age_s: float = 3600.0) -> None:
+    """Remove crash-orphaned ``mriya_ckpt_<pid>_*`` dirs from tmpfs
+    (normal exits remove their own): a dir whose owning pid is dead
+    goes, a dir whose owner is alive stays whatever its age (a long
+    drain's live checkpoint), and a dir without a pid in its name goes
+    once older than ``max_age_s``. Best-effort."""
+    import time
+
+    cutoff = time.time() - max_age_s
+    try:
+        names = [d for d in os.listdir(_SHM) if d.startswith("mriya_ckpt_")]
+    except OSError:
+        return
+    for d in names:
+        owner = d.split("_")[2]
+        p = os.path.join(_SHM, d)
         try:
-            for d in os.listdir("/dev/shm"):
-                if d.startswith("mriya_ckpt_"):
-                    p = os.path.join("/dev/shm", d)
-                    try:
-                        if os.path.getmtime(p) < cutoff:
-                            shutil.rmtree(p, ignore_errors=True)
-                    except OSError:
-                        pass
+            if owner.isdigit():
+                if _pid_alive(int(owner)):
+                    continue
+            elif os.path.getmtime(p) >= cutoff:
+                continue
         except OSError:
-            pass
-        return tempfile.mkdtemp(prefix=f"mriya_ckpt_{tag}_", dir="/dev/shm")
-    return f"{_STAGE_ROOT}/ckpt_{tag}_{uuid.uuid4().hex[:12]}"
+            continue
+        shutil.rmtree(p, ignore_errors=True)
+
+
+@contextmanager
+def _ckpt_dir(tag: str):
+    """Fresh throwaway checkpoint location, as a ``file://`` URI, for
+    the module's BOUNDED stream drivers; removed when the block exits,
+    also on failure. Per-micro-batch offset-log and state-store commits
+    fsync the checkpoint (measured ~35% of a bounded drain's wall on
+    disk), and no bounded replay here is ever resumed across runs, so
+    the checkpoint lives on tmpfs when one exists. ``tempfile.mkdtemp``
+    gives a fresh 0700 directory (no predictable shared path for
+    another user to pre-plant); the owning pid in its name lets the
+    orphan sweep spare live drains. The URI keeps Spark on the local
+    filesystem whatever ``fs.defaultFS`` says. Unbounded production
+    streams pass their own durable checkpoint locations and never go
+    through these drivers."""
+    import tempfile
+
+    if os.path.isdir(_SHM) and os.access(_SHM, os.W_OK):
+        _sweep_shm_ckpts()
+        path = tempfile.mkdtemp(prefix=f"mriya_ckpt_{os.getpid()}_{tag}_", dir=_SHM)
+    else:
+        path = f"{_STAGE_ROOT}/ckpt_{tag}_{uuid.uuid4().hex[:12]}"
+    try:
+        yield f"file://{path}"
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def stage_events_files(
@@ -186,9 +217,11 @@ def run_to_memory_sink(
     """Drive a bounded stream to completion into a memory sink and
     return the final result as a batch DataFrame."""
     name = f"out_{uuid.uuid4().hex[:12]}"
-    ckpt = _ckpt_dir(name)
     spark = stream_df.sparkSession
-    with _bounded_state_partitions(spark, state_partitions):
+    with (
+        _ckpt_dir(name) as ckpt,
+        _bounded_state_partitions(spark, state_partitions),
+    ):
         q = (
             stream_df.writeStream.outputMode(output_mode)
             .format("memory")
@@ -198,9 +231,7 @@ def run_to_memory_sink(
             .start()
         )
         q.awaitTermination()
-    out = spark.table(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    return spark.table(name)
 
 
 def run_until_idle(
@@ -212,9 +243,11 @@ def run_until_idle(
     continuous micro-batches and block with ``processAllAvailable()``
     until the source reports no new data, then stop."""
     name = f"out_{uuid.uuid4().hex[:12]}"
-    ckpt = _ckpt_dir(name)
     spark = stream_df.sparkSession
-    with _bounded_state_partitions(spark, state_partitions):
+    with (
+        _ckpt_dir(name) as ckpt,
+        _bounded_state_partitions(spark, state_partitions),
+    ):
         q = (
             stream_df.writeStream.outputMode(output_mode)
             .format("memory")
@@ -227,9 +260,7 @@ def run_until_idle(
         finally:
             q.stop()
         q.awaitTermination()
-    out = spark.table(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    return spark.table(name)
 
 
 def _event_time(events: DataFrame) -> DataFrame:
@@ -447,8 +478,10 @@ def run_foreach_batch(
     from mriya_spark.cachedir import sweep_stale
 
     sweep_stale("stream_v2", ckpt_prefix)
-    ckpt = _ckpt_dir(ckpt_prefix.rstrip("_"))
-    with _bounded_state_partitions(spark, 8):
+    with (
+        _ckpt_dir(ckpt_prefix.rstrip("_")) as ckpt,
+        _bounded_state_partitions(spark, 8),
+    ):
         writer = stream.writeStream.foreachBatch(batch_fn).option(
             "checkpointLocation", ckpt
         )
@@ -461,7 +494,6 @@ def run_foreach_batch(
             finally:
                 q.stop()
         q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def stateful_user_counts(events: DataFrame) -> DataFrame:
@@ -718,7 +750,6 @@ def stream_corpus_ingest(
     from mriya_spark.ops.dedup import normalized
 
     spark = docs.sparkSession
-    ckpt = _ckpt_dir("ingest")
 
     def ingest_batch(batch: DataFrame, epoch_id: int) -> None:
         scored = batch.select(
@@ -741,15 +772,7 @@ def stream_corpus_ingest(
             in_batch = in_batch.join(seen, on="fingerprint", how="left_anti")
         in_batch.write.mode("append").parquet(target_path)
 
-    with _bounded_state_partitions(spark, 8):
-        q = (
-            docs.writeStream.foreachBatch(ingest_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    run_foreach_batch(docs, ingest_batch, ckpt_prefix="ckpt_ingest_")
     return target_path
 
 
@@ -890,24 +913,13 @@ def stream_neardup_ingest(
     fetch reads only collided docs' rows. The doc store appends;
     nothing rewrites.
     """
-    spark = docs.sparkSession
-    ckpt = _ckpt_dir("neardup")
-
     def ingest_batch(batch: DataFrame, epoch_id: int) -> None:
         neardup_ingest_batch(
             batch, target_path, threshold=threshold, n=n,
             num_perm=num_perm, bands=bands, seed=seed,
         )
 
-    with _bounded_state_partitions(spark, 8):
-        q = (
-            docs.writeStream.foreachBatch(ingest_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    run_foreach_batch(docs, ingest_batch, ckpt_prefix="ckpt_neardup_")
     return target_path
 
 
@@ -1236,24 +1248,13 @@ def stream_neardup_ingest_portable(
     machinery, same per-batch screen-then-append recurrence — and with
     fixed staged batches the surviving corpus is a pure function of
     (docs, batch boundaries) that a SQL oracle can unroll."""
-    spark = docs.sparkSession
-    ckpt = _ckpt_dir("neardup")
-
     def ingest_batch(batch: DataFrame, epoch_id: int) -> None:
         neardup_ingest_batch_portable(
             batch, target_path, threshold=threshold, n=n,
             num_perm=num_perm, bands=bands,
         )
 
-    with _bounded_state_partitions(spark, 8):
-        q = (
-            docs.writeStream.foreachBatch(ingest_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    run_foreach_batch(docs, ingest_batch, ckpt_prefix="ckpt_neardup_")
     return target_path
 
 
@@ -1530,8 +1531,6 @@ def stream_encode_fixed_vocab(
     keys), never O(target bytes)."""
     from mriya_spark.ops.text import bpe_token_ids
 
-    spark = docs.sparkSession
-    ckpt = _ckpt_dir("fixedenc")
     validated = [False]
 
     def encode_batch(batch: DataFrame, epoch_id: int) -> None:
@@ -1549,15 +1548,7 @@ def stream_encode_fixed_vocab(
             out = out.join(seen, on="doc_id", how="left_anti")
         out.write.mode("append").parquet(target_path)
 
-    with _bounded_state_partitions(spark, 8):
-        q = (
-            docs.writeStream.foreachBatch(encode_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    run_foreach_batch(docs, encode_batch, ckpt_prefix="ckpt_fixedenc_")
     return target_path
 
 
@@ -1627,9 +1618,6 @@ def stream_decode_fixed_vocab(
     is append-only parquet."""
     from mriya_spark.ops.text import bpe_decode
 
-    spark = ids_stream.sparkSession
-    ckpt = _ckpt_dir("fixeddec")
-
     validated = [False]
 
     def decode_batch(batch: DataFrame, epoch_id: int) -> None:
@@ -1641,13 +1629,5 @@ def stream_decode_fixed_vocab(
             out = out.join(seen, on="doc_id", how="left_anti")
         out.write.mode("append").parquet(target_path)
 
-    with _bounded_state_partitions(spark, 8):
-        q = (
-            ids_stream.writeStream.foreachBatch(decode_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    run_foreach_batch(ids_stream, decode_batch, ckpt_prefix="ckpt_fixeddec_")
     return target_path

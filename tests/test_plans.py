@@ -1183,6 +1183,24 @@ def test_auto_salt_switches_at_both_regimes(spark):
     assert "__salt" not in plan, plan
 
 
+def test_auto_salt_ignores_statless_source(spark):
+    """A leaf without statistics (here an RDD) reports sizeInBytes ==
+    Long.MaxValue, which a projection above it scales down; either
+    way the estimate is unavailable and the resolver stays unsalted
+    instead of picking salt 8."""
+    from pyspark.sql import functions as F
+
+    from mriya_spark.ops.layout import resolve_auto_salt_chars
+
+    rdd = spark.sparkContext.parallelize([(i, i % 3, "x" * 8) for i in range(10)])
+    docs = spark.createDataFrame(rdd, "doc_id long, grp long, text string")
+    leaf = docs._jdf.queryExecution().optimizedPlan()
+    assert int(str(leaf.stats().sizeInBytes())) == 2**63 - 1
+    assert resolve_auto_salt_chars(docs, 16) == 0
+    assert resolve_auto_salt_chars(docs.select("doc_id"), 16) == 0
+    assert resolve_auto_salt_chars(docs.filter(F.col("grp") == 1), 4) == 0
+
+
 def test_salted_shard_shuffle_no_whole_shard_sort(spark):
     """The salted path must never cluster a whole shard into one
     partition: the data-path exchange hashes on (shard, salt) — small

@@ -213,6 +213,22 @@ def test_training_shards_manifest_verifier(spark, tmp_path):
         sinks.read_training_shards(spark, path)
 
 
+def test_training_shards_salt_chars_validated(spark, tmp_path):
+    """``salt_chars`` is exactly "auto" or an int in 0..8; anything
+    else fails before any job runs, naming the parameter."""
+    import pytest
+
+    from mriya_spark import sinks
+
+    df = spark.range(0, 10).selectExpr("id AS doc_id")
+    path = str(tmp_path / "shards")
+    for bad in ("AUTO", "3", 9, -1, 1.5, True, None):
+        with pytest.raises(ValueError, match="salt_chars"):
+            sinks.write_training_shards(df, path, num_shards=2, salt_chars=bad)
+    manifest = sinks.write_training_shards(df, path, num_shards=2, salt_chars=0)
+    assert manifest["total_rows"] == 10
+
+
 def test_shard_shuffle_epoch_keying(spark):
     """shard_shuffle(epoch=N): each epoch's (shard, pos) assignment is
     deterministic and individually replayable; different epochs give

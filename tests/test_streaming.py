@@ -1,3 +1,4 @@
+import shutil
 import uuid
 
 from pyspark.sql import functions as F
@@ -1139,3 +1140,55 @@ def test_stream_shard_delivery_bloom_screen_same_result(spark, tmp_path):
         sinks.append_training_shards(
             docs, plain, num_shards=4, seed=5, bloom_bits=4096
         )
+
+
+def test_ckpt_sweep_spares_live_owners_and_drains_leave_nothing(spark, tmp_path):
+    """Bounded drains checkpoint to a ``file://`` URI under tmpfs named
+    with the owning pid. The orphan sweep removes a dead owner's dir
+    and an old dir without a pid, but spares a live owner's dir
+    however old; each drain removes its own checkpoint."""
+    import os
+    import subprocess
+    import sys
+    import tempfile
+
+    import pytest
+
+    if not (os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)):
+        pytest.skip("no writable tmpfs")
+    dead = subprocess.Popen([sys.executable, "-c", "pass"])
+    dead.wait()
+    mine = f"mriya_ckpt_{os.getpid()}_"
+    live = tempfile.mkdtemp(prefix=f"{mine}live_", dir="/dev/shm")
+    orphan = tempfile.mkdtemp(prefix=f"mriya_ckpt_{dead.pid}_gone_", dir="/dev/shm")
+    legacy = tempfile.mkdtemp(prefix="mriya_ckpt_legacy_", dir="/dev/shm")
+    for d in (live, legacy):
+        os.utime(d, (0, 0))  # far older than the age gate
+    try:
+        before = {d for d in os.listdir("/dev/shm") if d.startswith(mine)}
+        seen = []
+        with S._ckpt_dir("probe") as uri:
+            seen.append(uri)
+            assert uri.startswith(f"file:///dev/shm/{mine}probe_")
+            assert os.path.isdir(uri[len("file://"):])
+        assert not os.path.exists(seen[0][len("file://"):])
+        assert os.path.isdir(live)
+        assert not os.path.exists(orphan)
+        assert not os.path.exists(legacy)
+
+        src = str(tmp_path / "src")
+        spark.range(0, 20).write.parquet(src)
+        stream = spark.readStream.schema("id long").parquet(src)
+        out = S.run_to_memory_sink(stream.groupBy().count(), output_mode="complete")
+        assert out.collect()[0][0] == 20
+
+        def batch_fn(batch, epoch_id):
+            seen.extend(d for d in os.listdir("/dev/shm") if d.startswith(mine))
+
+        S.run_foreach_batch(stream, batch_fn)
+        assert any(d.startswith(f"{mine}ckpt_fb_") for d in seen), seen
+        after = {d for d in os.listdir("/dev/shm") if d.startswith(mine)}
+        assert after == before
+    finally:
+        for d in (live, orphan, legacy):
+            shutil.rmtree(d, ignore_errors=True)
